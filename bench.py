@@ -12,7 +12,6 @@ Env knobs:
   SPARK_GRAFT_SF_DIR   testdata dir (default /root/testdata/sf0.1)
   SPARK_GRAFT_CPUS     local[N] parallelism (default 32)
   SPARK_GRAFT_BENCH_ROUNDS   crawl rounds to time (default 3)
-  SPARK_GRAFT_BENCH_BUDGET   per-host fetches/round (default 1000)
 
 Scaling evidence (N vs 4N cores) lives in bench_scaling.py →
 BENCH/BASELINE.md; this file stays single-parallelism so the driver's
@@ -185,7 +184,7 @@ def ensure_bench_corpus(spark) -> str:
     return d
 
 
-def crawl_throughput(spark, rounds: int, budget: int) -> dict:
+def crawl_throughput(spark, rounds: int) -> dict:
     """Fixed-round crawl on the bench corpus → urls+articles per second."""
     from newscrawler_spark.runner import run_crawl
 
@@ -193,7 +192,7 @@ def crawl_throughput(spark, rounds: int, budget: int) -> dict:
     pages = spark.read.parquet(f"{d}/pages.parquet")
     seeds = spark.read.parquet(f"{d}/seeds.parquet")
     cfg = CrawlConfig(
-        per_host_budget=budget,
+        per_host_budget=1000,
         max_depth=3,
         round_seconds=10**6,  # don't let fixture crawl-delays cap the budget
         batch_size=None,
@@ -233,7 +232,6 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     rounds = int(os.environ.get("SPARK_GRAFT_BENCH_ROUNDS", "3"))
-    budget = int(os.environ.get("SPARK_GRAFT_BENCH_BUDGET", "1000"))
 
     from newscrawler_spark.contract import all_queries, ensure_cache
     from newscrawler_spark.session import get_spark
@@ -242,7 +240,7 @@ def main() -> None:
     # fixture caches outside the timed region
     ensure_cache(spark, "correctness")
 
-    crawl = crawl_throughput(spark, rounds, budget)
+    crawl = crawl_throughput(spark, rounds)
 
     queries = all_queries()
     timings: dict[str, float] = {}

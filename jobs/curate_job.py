@@ -132,6 +132,10 @@ def main(argv=None) -> None:
     docs = None
     try:
         docs, kind = load_documents(spark, args.input, args.input_kind)
+        if not args.url_filter:
+            # url is carried only for the --url-filter gate; it must not
+            # leak into the training shards' schema
+            docs = docs.drop("url")
         # the extraction chain behind `docs` is expensive (WARC parse +
         # Arrow HTML extraction); it feeds the curation chain, the
         # annotation join, AND the summary count — materialize it once

@@ -37,49 +37,23 @@ class CrawlConfig:
     # mini-oracle.
     round_seconds: float = 10.0
 
-    # A3 fetch join strategy: broadcast the (bounded) candidate set so the
-    # huge pages table is STREAMED, never shuffled — a round's candidates
-    # are ≤ hosts×budget (or batch_size) rows. On a real cluster with a
-    # url_hash-bucketed pages table, set False to use the shuffle-free
-    # bucketed sort-merge join instead (candidates >100M won't broadcast).
-    broadcast_fetch_join: bool = True
-    # Physical strategy for the A3 fetch join. None = auto: "broadcast"
-    # for normal (bounded-candidate) rounds; "bucket" once the round's
-    # candidate set was materialized (A7 bulk mode, frontier >
-    # materialize_candidates_rows) — building a 10^8-row hash relation
-    # on the driver is the wrong shape there, while the co-bucketed
-    # candidates⋈pages shuffled-hash join moves ZERO page bytes and has
-    # no driver-side build at all. Explicit values override:
-    # "broadcast" | "bucket" | "shuffle".
-    fetch_join_strategy: str | None = None
-    # bucket count for the enriched-corpus table and the materialized
-    # candidate table (must match for the exchange-free join). Size it so
-    # one bucket of candidates fits an executor's hash-build memory:
-    # at 10^10 urls ~ 64k buckets; 32 covers every local test tier.
-    corpus_buckets: int = 32
-    # rank_in_host physical strategy: None = auto (distributed once the
-    # frontier exceeds materialize_candidates_rows). The window form sorts
-    # each host in ONE task — a 10^8-row host is a serial sort; the
-    # distributed form range-partitions on (host, total order) and adds
-    # per-slice offsets (frontier.rank_in_host_distributed).
-    distributed_rank: bool | None = None
-    # ONE Arrow pass for stats+extraction+links (operators/process.py)
-    # instead of three html transfers; False = the unfused operator chain
-    fused_pipeline: bool = True
-    # materialize each round's fetched set to scratch parquet instead of
-    # a JVM cache. Default off: the cache is faster when it fits (locally
-    # measured); turn on when a round's html payload outsizes executor
-    # memory (compression + column pruning beat cache eviction there).
-    scratch_fetched: bool = False
-    # materialize each round's scheduled candidate set to scratch parquet
-    # before the fetch join: every broadcast consumer then builds from a
-    # cheap columnar scan instead of re-deriving (or cache-scanning) the
-    # schedule window; also decouples the window's lineage from every
-    # downstream job. Costs one write job per round, so None = auto:
-    # materialize only when the previous round's frontier (known free
-    # from its manifest) exceeds materialize_candidates_rows.
-    materialize_candidates: bool | None = None
+    # A3 fetch join / bulk switch. A round has one default physical path:
+    # broadcast the (bounded) candidate set so the huge pages table is
+    # STREAMED, never shuffled, and persist the small hit set. Once the
+    # previous round's frontier (known free from its manifest) exceeds
+    # materialize_candidates_rows, the round takes the bulk path instead:
+    # distributed rank_in_host (frontier.rank_in_host_distributed), the
+    # candidate set materialized to scratch parquet, and — on a bucketed
+    # corpus — the exchange-free bucketed candidates⋈pages join with a
+    # streaming fetched set. This threshold alone drives that switch.
     materialize_candidates_rows: int = 150_000
+    # bucket count for the enriched corpus, which run_crawl writes
+    # bucketed by url_hash when it is given an extra_frontier (A7 bulk
+    # mode), and for the bulk path's materialized candidate table (must
+    # match for the exchange-free join). Size it so one bucket of
+    # candidates fits an executor's hash-build memory: at 10^10 urls
+    # ~ 64k buckets; 32 covers every local test tier.
+    corpus_buckets: int = 32
 
     # scale path (J / §5.3)
     hot_host_threshold: int = 50_000  # rows/host above which we salt

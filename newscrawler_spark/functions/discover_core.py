@@ -1,7 +1,7 @@
 """Link / sitemap / RSS discovery core (SURVEY.md §3 A5/A6/C1/C3).
 
 Single definition of discovery semantics, imported by BOTH the Spark
-Arrow-batched discovery stage (:mod:`newscrawler_spark.operators.discover`)
+Arrow-batched page pass (:mod:`newscrawler_spark.operators.process`)
 and the pure-Python mini-oracle (``tests/oracle_crawler.py``) — so link
 sets and therefore fetch ordering match by construction.
 

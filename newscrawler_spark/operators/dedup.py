@@ -970,6 +970,15 @@ def substring_span_dedup(
     Returns (id, n_tokens, n_removed, cleaned_text); docs shorter than
     k tokens have no windows and are kept whole.
 
+    ``cleaned_text`` is NORMALIZED token-space text, not the original
+    text with spans excised: it is rebuilt from :func:`tokens_expr`
+    output — lowercased, split on ``TOKEN_SPLIT`` whitespace runs (so
+    newlines and indentation are gone), surviving tokens joined by
+    single spaces — for EVERY document, including those with nothing
+    removed. Using it as replacement training text therefore normalizes
+    the whole corpus; it does not preserve the source's casing or
+    layout.
+
     Scale shape (100 TB): sliding windows are one projection + explode —
     O(tokens) rows; the document-frequency pass is ONE groupBy on the
     window key; covered positions explode k rows per DUPLICATED window

@@ -1,18 +1,14 @@
-"""Discovery stage: link / sitemap / RSS child-url extraction (A5/A6/C1–C3).
+"""Discovery-side operators over the corpus: the RSS item table (A6/F1)
+and spider auto-selection (C3).
 
-One ``mapInPandas`` Arrow pass over fetched pages runs the unified
-dispatch in :mod:`newscrawler_spark.functions.discover_core` (the same
-function the mini-oracle calls), emitting child rows
-``(url, priority, depth, seed_host, discovered_round)``. The caller then
-enriches (canon/hash/host — codegen'd) and applies the offsite/depth/seen
-filters from :mod:`newscrawler_spark.operators.frontier`.
+A fetched page's child urls (C1/A5/A6) are discovered inside the page
+pass (``operators/process.py``), which runs the unified dispatch in
+:mod:`newscrawler_spark.functions.discover_core` — the same function the
+mini-oracle calls.
 
 UDF discipline: Arrow-batched ``mapInPandas`` only — the per-document
 regex scan is inherent to HTML parsing (no lxml offline, SURVEY.md §7.5);
 there is no per-row Spark Python UDF.
-
-Column-pruning note: input is ``select('url','html','crawler','depth')``
-so the scan never materializes ``text``/``warc_ts`` into the Arrow stream.
 """
 
 from __future__ import annotations
@@ -23,45 +19,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from newscrawler_spark.functions.discover_core import (  # noqa: F401 — re-exported
-    PRIO_FEED,
-    PRIO_FEED_CHILD,
-    PRIO_LINK,
-    PRIO_SEED,
-    discover_from_page,
-)
 from newscrawler_spark.functions.extract_core import decode_html
 
-CHILD_SCHEMA = "url string, priority int, depth int, seed_host string"
 RSS_ITEM_SCHEMA = "feed_host string, link string, rss_title string, pub_date_raw string"
-
-
-def _discover_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in it:
-        rows = []
-        for url, blob, crawler, depth, seed_host in zip(
-            pdf["url"], pdf["html"], pdf["crawler"], pdf["depth"], pdf["seed_host"]
-        ):
-            for child, prio, d in discover_from_page(
-                url, decode_html(blob), crawler, int(depth)
-            ):
-                rows.append((child, prio, d, seed_host))
-        yield pd.DataFrame(rows, columns=["url", "priority", "depth", "seed_host"])
-
-
-def discover_children(fetched: DataFrame, round_no: int) -> DataFrame:
-    """C1/A5/A6 — child urls of this round's fetched pages.
-
-    ``fetched`` needs columns ``url, html, crawler, depth, seed_host``.
-    Children carry ``discovered_round = round_no + 1`` (they become
-    eligible next round) and ``retry = 0``.
-    """
-    children = fetched.select("url", "html", "crawler", "depth", "seed_host").mapInPandas(
-        _discover_batches, schema=CHILD_SCHEMA
-    )
-    return children.withColumn(
-        "discovered_round", F.lit(round_no + 1)
-    ).withColumn("retry", F.lit(0))
 
 
 def _rss_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -189,9 +189,9 @@ def schedule_round(
     4. ``rank_in_host`` recomputed on the final (small) candidate set so
        ranks are gap-free — the mini-oracle defines the same.
 
-    Physical strategy (``cfg.distributed_rank``; auto = on once
-    ``frontier_rows`` exceeds ``cfg.materialize_candidates_rows``): the
-    window form sorts each host in ONE task; the distributed form
+    Physical strategy (distributed once ``frontier_rows`` exceeds
+    ``cfg.materialize_candidates_rows``, else window): the window form
+    sorts each host in ONE task; the distributed form
     (:func:`rank_in_host_distributed`) range-partitions the frontier and
     adds per-slice offsets — identical output (equality-tested), every
     sort bounded by ``|frontier| / P``. The budget filter on the
@@ -209,13 +209,8 @@ def schedule_round(
     else:
         fr = fr.withColumn("budget", F.lit(cfg.per_host_budget))
 
-    dist = cfg.distributed_rank
-    if dist is None:
-        dist = (
-            frontier_rows is not None
-            and frontier_rows > cfg.materialize_candidates_rows
-        )
-    if dist:
+    if (frontier_rows is not None
+            and frontier_rows > cfg.materialize_candidates_rows):
         ranked = rank_in_host_distributed(fr).select(*fr.columns, "rank_in_host")
         cand = ranked.where(F.col("rank_in_host") <= F.col("budget"))
         if cfg.batch_size is not None:

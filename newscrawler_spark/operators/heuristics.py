@@ -7,8 +7,8 @@ crawler_contains_only_article_alikes}`` gated by the boolean condition
 interpreter in ``heuristics_manager.py :: HeuristicsManager`` (symbol
 cites; mount empty, SURVEY.md §0).
 
-Spark shape: ONE Arrow pass (``mapInPandas`` over ``html``) materializes
-every per-page stat as plain columns (shared semantics:
+Spark shape: the page pass (``operators/process.py``) materializes every
+per-page stat as plain columns (``STATS_FIELDS``; shared semantics:
 ``functions.extract_core.page_stats``); the config condition string is
 compiled ONCE into a Spark SQL expression that Catalyst constant-folds and
 evaluates natively — the interpreter itself costs nothing at runtime (D7).
@@ -17,14 +17,11 @@ evaluates natively — the interpreter itself costs nothing at runtime (D7).
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from newscrawler_spark.config import CrawlConfig
-from newscrawler_spark.functions.extract_core import decode_html, page_stats
 
 STATS_FIELDS = (
     "og_type boolean, n_headlines int, linked_headline_ratio double, "
@@ -32,32 +29,6 @@ STATS_FIELDS = (
     "meta_contains_article_keywords boolean, n_paragraphs int"
 )
 _STATS_COLS = [f.split()[0] for f in STATS_FIELDS.split(", ")]
-
-
-def with_page_stats(fetched: DataFrame) -> DataFrame:
-    """D1–D6 — append the stats columns to ``fetched`` (needs url, html).
-
-    Pass-through of every input column; stats computed per Arrow batch.
-    """
-    in_cols = fetched.columns
-    schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in fetched.schema.fields]
-    ) + ", " + STATS_FIELDS
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            stats = [
-                page_stats(decode_html(blob), url)
-                for url, blob in zip(pdf["url"], pdf["html"])
-            ]
-            sdf = pd.DataFrame(stats, columns=_STATS_COLS)
-            yield pd.concat(
-                [pdf.reset_index(drop=True), sdf.reset_index(drop=True)], axis=1
-            )
-
-    return fetched.mapInPandas(batches, schema=schema).select(
-        *in_cols, *_STATS_COLS
-    )
 
 
 # --------------------------------------------------------- D7 condition DSL
@@ -75,6 +46,14 @@ _ALLOWED_BARE = {
 }
 
 
+def _checked_condition(cfg: CrawlConfig) -> str:
+    expr = cfg.heuristics_condition
+    for name in set(_NAME_RE.findall(expr)):
+        if name not in _ALLOWED_BARE:
+            raise ValueError(f"unknown heuristic in condition: {name!r}")
+    return expr
+
+
 def compile_condition(cfg: CrawlConfig) -> Column:
     """D7 — config condition string → one Catalyst boolean expression.
 
@@ -83,10 +62,7 @@ def compile_condition(cfg: CrawlConfig) -> Column:
     check on the seed's crawler column (D6). Unknown names are rejected
     (the reference's interpreter raises on unknown heuristics too).
     """
-    expr = cfg.heuristics_condition
-    for name in set(_NAME_RE.findall(expr)):
-        if name not in _ALLOWED_BARE:
-            raise ValueError(f"unknown heuristic in condition: {name!r}")
+    expr = _checked_condition(cfg)
     substitutions = {
         "linked_headlines": (
             f"(linked_headline_ratio <= {cfg.linked_headlines_max_ratio!r})"
@@ -102,21 +78,13 @@ def compile_condition(cfg: CrawlConfig) -> Column:
     return F.expr(compiled)
 
 
-def article_gate(with_stats: DataFrame, cfg: CrawlConfig) -> DataFrame:
-    """Keep pages the condition accepts (candidate articles)."""
-    return with_stats.where(compile_condition(cfg))
-
-
 def make_condition_py(cfg: CrawlConfig):
     """Pure-Python twin of :func:`compile_condition` — compiled ONCE to a
     code object, evaluated per page against a tiny env dict. Used inside
-    the fused Arrow pass to skip extraction work for pages the Catalyst
+    the page pass (operators/process.py) to skip extraction work for pages the Catalyst
     gate will reject anyway. Exactly consistent: the same boolean /
     IEEE-double comparisons on the same values."""
-    expr = cfg.heuristics_condition
-    for name in set(_NAME_RE.findall(expr)):
-        if name not in _ALLOWED_BARE:
-            raise ValueError(f"unknown heuristic in condition: {name!r}")
+    expr = _checked_condition(cfg)
     py = re.sub(r"\bAND\b", "and", expr)
     py = re.sub(r"\bOR\b", "or", py)
     py = re.sub(r"\bNOT\b", "not", py)
@@ -137,7 +105,3 @@ def make_condition_py(cfg: CrawlConfig):
 
     return evaluate
 
-
-def eval_condition_py(cfg: CrawlConfig, stats: dict, crawler: str) -> bool:
-    """One-shot convenience wrapper around :func:`make_condition_py`."""
-    return make_condition_py(cfg)(stats, crawler)

@@ -1,22 +1,20 @@
-"""Fused per-page processing: ONE Arrow pass for D1–D6 + E1–E8 + C1/A5/A6.
+"""The page pass: ONE Arrow pass for D1–D6 + E1–E8 + C1/A5/A6.
 
 SURVEY.md §3 E1 describes exactly this shape — "a single applyInPandas/
 pandas_udf … one Arrow pass does E1–E8" with the stats pass (D) and link
-extraction sharing it. The unfused operators (heuristics.with_page_stats,
-extract.extract_articles, discover.discover_children) remain as
-standalone composable pieces; the runner uses this fused stage because
-each separate pass re-ships the round's html bytes (GBs) across the
-JVM→Python Arrow boundary — fusing cuts that to one transfer and two
-stage barriers per round.
+extraction sharing it. It is the crawl's only page pass: every round
+ships its fetched html across the JVM→Python Arrow boundary exactly once,
+here. (``extract.extract_articles`` remains for the ungated extraction of
+curation, the streaming daemon and compose.)
 
-Semantics are BY CONSTRUCTION identical: the same extract_core /
+Semantics match the mini-oracle BY CONSTRUCTION: the same extract_core /
 discover_core kernels run per document; the D7 gate still filters the
 returned stats columns in Catalyst; extraction results for pages the
 gate rejects are simply dropped (compute wasted on non-article pages is
 ~⅓ of extract cost — far cheaper than a second 6 GB Arrow transfer).
 
-Output: input identity columns + stats fields + article fields + a
-``links array<struct<url:string, priority:int, depth:int>>`` column.
+Output: input identity columns + stats fields + article fields + the
+parallel link arrays ``link_urls``, ``link_prios``, ``link_depths``.
 ``html`` is consumed and NOT re-emitted.
 """
 
@@ -77,7 +75,7 @@ def _process_batches_for(cfg):
                 doc = decode_html(blob)
                 stats = page_stats(doc, url)
                 # skip extraction for pages the Catalyst gate will drop —
-                # eval_condition_py is the exact python twin of the gate
+                # make_condition_py is the exact python twin of the gate
                 if eval_condition(stats, crawler):
                     rec = extract_article(url, doc, corpus_lang=lang)
                 else:
@@ -135,7 +133,8 @@ def articles_from_processed(processed: DataFrame, cfg) -> DataFrame:
 
 def children_from_processed(processed: DataFrame, round_no: int) -> DataFrame:
     """Zip the parallel link arrays natively and explode → child frontier
-    rows (same shape as discover.discover_children)."""
+    rows ``(url, priority, depth, seed_host, discovered_round, retry)``:
+    children become eligible in round ``round_no + 1``."""
     zipped = F.arrays_zip(
         F.col("link_urls").alias("url"),
         F.col("link_prios").alias("priority"),

@@ -16,8 +16,13 @@ Scale notes (100 TB / 10^10 urls): per-round state flows through the
 checkpoint parquet (no unbounded lineage); the seen-set anti-join runs
 behind the partitioned Bloom prefilter; the politeness window salts hot
 hosts; robots rules and the seeds table broadcast; ``html`` bytes cross
-the Arrow boundary only for pages that were actually scheduled (stats)
-resp. passed the gate (extraction).
+the Arrow boundary once per fetched page, in the single page pass
+(``process.process_pages``).
+
+Physical plan: a round has one default path (broadcast candidates, a
+persisted hit set) and one bulk path, chosen only from what the round can
+observe — a bucketed corpus (written at bootstrap when ``extra_frontier``
+is given) and a previous frontier above ``materialize_candidates_rows``.
 """
 
 from __future__ import annotations
@@ -30,21 +35,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from newscrawler_spark.config import DEFAULT_CONFIG, CrawlConfig
-from newscrawler_spark.operators import discover as D
+from newscrawler_spark.functions.discover_core import PRIO_FEED, PRIO_SEED
+from newscrawler_spark.operators import bucketio as BIO
 from newscrawler_spark.operators import frontier as FR
-from newscrawler_spark.operators import heuristics as H
+from newscrawler_spark.operators import linkgraph as LG
+from newscrawler_spark.operators import process as P
 from newscrawler_spark.operators import robots as R
 from newscrawler_spark.operators.seen_backend import backend_for
-from newscrawler_spark.operators.extract import ARTICLES_SCHEMA, extract_articles
+from newscrawler_spark.operators.extract import ARTICLES_SCHEMA
 from newscrawler_spark.operators.store import (
     COUNTERS_SCHEMA,
     FETCH_LOG_SCHEMA,
+    SEEN_SCHEMA,
     CrawlState,
 )
 
-import os as _os
-
-_PHASE_LOG = _os.environ.get("SPARK_GRAFT_PHASE_LOG") == "1"
+_PHASE_LOG = os.environ.get("SPARK_GRAFT_PHASE_LOG") == "1"
 
 
 class _phase:
@@ -96,7 +102,7 @@ def _seed_frontier(seeds_e: DataFrame) -> DataFrame:
         F.col("url_canon"),
         F.col("url_hash"),
         F.col("host"),
-        F.lit(D.PRIO_SEED).alias("priority"),
+        F.lit(PRIO_SEED).alias("priority"),
         F.lit(0).alias("depth"),
         F.lit(0).alias("discovered_round"),
         F.col("host").alias("seed_host"),
@@ -114,7 +120,7 @@ def _sitemap_frontier(sitemaps: DataFrame, seeds: DataFrame) -> DataFrame:
     return FR.enrich_urls(picked.select(F.col("sitemap_url").alias("url"), "host"), "url").select(
         "url", "url_canon", "url_hash",
         F.col("host"),
-        F.lit(D.PRIO_FEED).alias("priority"),
+        F.lit(PRIO_FEED).alias("priority"),
         F.lit(0).alias("depth"),
         F.lit(0).alias("discovered_round"),
         F.col("host").alias("seed_host"),
@@ -166,25 +172,21 @@ def run_crawl(
 
     pages_dir = f"{state_dir}/pages_enriched"
     last = state.latest_round()
-    # A7/bulk mode (explicit url-list frontier ≈ the whole corpus) makes
-    # the candidate set too big to broadcast-build on the driver — write
-    # the enriched corpus BUCKETED by url_hash so each round's fetch join
-    # is the exchange-free bucketed SHJ (operators/bucketio.py). Explicit
-    # cfg.fetch_join_strategy overrides the auto signal either way.
-    from newscrawler_spark.operators import bucketio as BIO
-
-    bucket_corpus = cfg.fetch_join_strategy == "bucket" or (
-        cfg.fetch_join_strategy is None and extra_frontier is not None
-    )
     if last is None:
         # one-time corpus enrichment, persisted so every round scans
-        # column-pruned parquet instead of recomputing canon over html
+        # column-pruned parquet instead of recomputing canon over html.
+        # A7/bulk mode (explicit url-list frontier ≈ the whole corpus)
+        # makes the candidate set too big to broadcast-build on the
+        # driver — write the corpus BUCKETED by url_hash so each bulk
+        # round's fetch join is the exchange-free bucketed SHJ
+        # (operators/bucketio.py).
         pe = enrich_pages(pages)
-        if bucket_corpus:
+        if extra_frontier is not None:
             BIO.write_bucketed(pe, pages_dir, cfg.corpus_buckets, "url_hash")
         else:
             pe.write.mode("overwrite").parquet(pages_dir)
-    if BIO.is_bucketed(pages_dir):
+    corpus_bucketed = BIO.is_bucketed(pages_dir)
+    if corpus_bucketed:
         pages_e = BIO.read_bucketed(spark, pages_dir)
     else:
         pages_e = spark.read.parquet(pages_dir)
@@ -256,8 +258,6 @@ def run_crawl(
     # input, nothing else.
     rank_pct = None
     if cfg.rank_priority_weight > 0:
-        from newscrawler_spark.operators import linkgraph as LG
-
         ranks_dir = f"{state_dir}/host_ranks"
         if not os.path.exists(os.path.join(ranks_dir, "_SUCCESS")):
             edges = LG.host_edges_from_pages(pages_e).withColumnRenamed(
@@ -303,17 +303,19 @@ def run_crawl(
             r -= 1
             break
 
-        # ---- B7/B8: schedule this round's candidates (frontier_rows from
-        # the manifest drives the window-vs-distributed rank auto-switch)
+        # ---- B7/B8: schedule this round's candidates. frontier_rows from
+        # the manifest drives the bulk switch (window vs distributed rank
+        # here, persisted vs materialized candidates below). The PageRank
+        # bonus reorders this round's schedule only: new_frontier is built
+        # from the un-bonused frontier, so waiting rows never compound it.
+        frontier_rows = man_prev["row_counts"]["frontier"]
+        sched_in = frontier
         if rank_pct is not None:
-            from newscrawler_spark.operators import linkgraph as LG
-
-            frontier = LG.apply_rank_bonus(
+            sched_in = LG.apply_rank_bonus(
                 frontier, rank_pct, cfg.rank_priority_weight
             )
         cand = FR.schedule_round(
-            frontier, cfg, budgets,
-            frontier_rows=man_prev["row_counts"]["frontier"],
+            sched_in, cfg, budgets, frontier_rows=frontier_rows,
         ).drop("budget")
 
         # ---- A3: "fetch" = corpus join on url_hash. The candidate set is
@@ -321,30 +323,18 @@ def run_crawl(
         # pages table is STREAMED — a plain left join SMJ would shuffle
         # the whole corpus (html bytes included) EVERY round. Misses
         # (404s) are recovered with a cheap anti-join on the small side.
-        mat = cfg.materialize_candidates
-        if mat is None:
-            # auto: the write pays off once the schedule window's input is
-            # big enough that re-walking it per broadcast build dominates
-            # the extra job; frontier size comes free from the manifest
-            mat = (man_prev["row_counts"]["frontier"]
-                   > cfg.materialize_candidates_rows)
-        if cfg.fetch_join_strategy is not None:
-            strat = cfg.fetch_join_strategy
-        elif mat and BIO.is_bucketed(pages_dir):
-            strat = "bucket"
-        elif cfg.broadcast_fetch_join:
-            strat = "broadcast"
-        else:
-            strat = "shuffle"
-        if mat:
+        bulk = frontier_rows > cfg.materialize_candidates_rows
+        bucket = bulk and corpus_bucketed
+        if bulk:
             # one parallel write, then every downstream build is a cheap
             # columnar re-scan — without this, each consuming action's
-            # broadcast subjob re-walks the window/cache lineage (profiled
-            # as the second-largest task-time bucket in the bulk round).
-            # In bucket mode the write doubles as the join's co-bucketing.
+            # broadcast subjob re-walks the window lineage (profiled as
+            # the second-largest task-time bucket in the bulk round).
+            # On a bucketed corpus the write doubles as the join's
+            # co-bucketing.
             with _phase("schedule+cand_write"):
                 cand_path = f"{state_dir}/scratch_cand"
-                if strat == "bucket":
+                if bucket:
                     BIO.write_bucketed(
                         cand, cand_path, cfg.corpus_buckets, "url_hash"
                     )
@@ -357,15 +347,7 @@ def run_crawl(
         page_cols = pages_e.select(
             "url_hash", F.col("url").alias("page_url"), "warc_ts", "html", "lang"
         )
-        if strat == "broadcast":
-            cand_side = F.broadcast(cand)
-        elif strat == "bucket":
-            # both sides bucketed by url_hash into cfg.corpus_buckets →
-            # SHJ with zero exchange and zero sort; build side = one
-            # bucket of candidates, never the whole set
-            cand_side = cand.hint("shuffle_hash")
-        else:
-            cand_side = cand
+
         def _log_cols(df):
             return df.select(
                 "url", "url_canon", "url_hash", "host",
@@ -383,17 +365,19 @@ def run_crawl(
                 "crawler", F.coalesce("crawler", F.lit(cfg.default_crawler))
             )
 
-        scratch = f"{state_dir}/scratch_round"
-        if strat == "bucket" and not cfg.scratch_fetched:
+        if bucket:
             # STREAMING fetched set — at bulk scale the hit set ≈ the
-            # corpus, and materializing its html (JVM cache or scratch
-            # parquet) is the round's GC/IO bill: profiled 10x GC blowup
-            # at 4x width from the heap-cached html alone. Instead:
+            # corpus, and materializing its html is the round's GC/IO
+            # bill: profiled 10x GC blowup at 4x width from the
+            # heap-cached html alone. Instead:
             # (a) statuses come from a SLIM key join — the bucketed scan
             #     prunes the corpus read to the url_hash column;
             # (b) the full html join runs exactly once, fused straight
             #     into the Arrow pass — html flows scan→extract and is
             #     never stored anywhere.
+            # Both sides are bucketed by url_hash into cfg.corpus_buckets
+            # → SHJ with zero exchange and zero sort; the build side is
+            # one bucket of candidates, never the whole set.
             hb = (
                 F.col("html_bytes") if "html_bytes" in pages_e.columns
                 else F.length("html").cast("long")  # legacy state dir
@@ -415,19 +399,11 @@ def run_crawl(
             )
             fetch_log = _log_cols(fetched_slim)
             ok = _with_crawler(
-                page_cols.join(cand_side, "url_hash")
+                page_cols.join(cand.hint("shuffle_hash"), "url_hash")
             ).withColumn("status", F.lit(200))
         else:
-            # bounded rounds: hit set is small — JVM cache by default;
-            # scratch parquet when a round's html payload outsizes
-            # executor memory (cfg flag)
-            if cfg.scratch_fetched:
-                page_cols.join(cand_side, "url_hash").write.mode(
-                    "overwrite"
-                ).parquet(scratch)
-                hit = spark.read.parquet(scratch)
-            else:
-                hit = page_cols.join(cand_side, "url_hash").persist()
+            # bounded rounds: the hit set is small — JVM cache
+            hit = page_cols.join(F.broadcast(cand), "url_hash").persist()
             miss = (
                 cand.join(hit.select("url_hash"), "url_hash", "left_anti")
                 .withColumn("page_url", F.lit(None).cast("string"))
@@ -442,30 +418,11 @@ def run_crawl(
             fetch_log = _log_cols(fetched)
             ok = fetched.where(F.col("status") == 200)
 
-        if cfg.fused_pipeline:
-            # ---- D+E+C fused: ONE Arrow pass (stats, article record,
-            # links) — html crosses to Python exactly once per round
-            from newscrawler_spark.operators import process as P
-
-            processed = P.process_pages(ok, cfg).persist()
-            articles = P.articles_from_processed(processed, cfg)
-            children = P.children_from_processed(processed, r - 1)
-        else:
-            processed = None
-            # ---- D: one Arrow stats pass + Catalyst-compiled gate
-            with_stats = H.with_page_stats(
-                ok.select("url", "url_canon", "url_hash", "warc_ts", "html",
-                          "lang", "crawler")
-            )
-            gated = H.article_gate(with_stats, cfg)
-
-            # ---- E: extraction (gate-passers only)
-            articles = extract_articles(gated)
-
-            # ---- C1/A5/A6: discovery → B4/B6/B9/B3 filters
-            children = D.discover_children(
-                ok.select("url", "html", "crawler", "depth", "seed_host"), r - 1
-            )
+        # ---- D+E+C: ONE Arrow pass (stats, article record, links) —
+        # html crosses to Python exactly once per round
+        processed = P.process_pages(ok, cfg).persist()
+        articles = P.articles_from_processed(processed, cfg)
+        children = P.children_from_processed(processed, r - 1)
         children = FR.enrich_urls(children)
         children = children.where(F.col("host") == F.col("seed_host"))  # B4
         children = children.join(F.broadcast(seed_crawlers), "seed_host", "left").where(
@@ -513,6 +470,12 @@ def run_crawl(
         articles = articles.persist()
 
         retries = FR.make_retries(fetch_log, cfg)
+        if rank_pct is not None:
+            # the fetch log records the scheduled (bonused) priority; take
+            # the bonus back off so a retry re-enters at its base priority
+            retries = LG.apply_rank_bonus(
+                retries, rank_pct, -cfg.rank_priority_weight
+            )
 
         new_frontier = (
             frontier.join(cand.select("url_hash"), "url_hash", "left_anti")
@@ -587,18 +550,8 @@ def run_crawl(
             with _phase("compact_seen"):
                 state.compact_seen(r)
         n_sched = man["row_counts"]["fetch_log"]
-        frames = [cand, fetch_log, children, articles, gated_children]
-        if processed is not None:
-            frames.append(processed)
-        if hit is None:
-            frames.append(hit_keys)
-        elif cfg.scratch_fetched:
-            import shutil as _shutil
-
-            _shutil.rmtree(scratch, ignore_errors=True)
-        else:
-            frames.append(hit)
-        for df in frames:
+        for df in (cand, fetch_log, children, articles, gated_children,
+                   processed, hit_keys if hit is None else hit):
             df.unpersist()
         rounds_run += 1
         if n_sched == 0:
@@ -637,13 +590,7 @@ def evict_to_recrawl(
     the committed round manifest, or None when ``urls`` is empty (an
     empty eviction commits no round).
     """
-    from newscrawler_spark.operators.extract import ARTICLES_SCHEMA
     from newscrawler_spark.operators.sinks import download_list_frontier
-    from newscrawler_spark.operators.store import (
-        COUNTERS_SCHEMA as _CSCHEMA,
-        FETCH_LOG_SCHEMA as _FSCHEMA,
-        SEEN_SCHEMA as _SSCHEMA,
-    )
 
     last = state.latest_round()
     if last is None:
@@ -673,12 +620,12 @@ def evict_to_recrawl(
     def build_counters(counts: dict):
         return spark.createDataFrame(
             [(state.run_id, r, counts["seen_evict"], 0, 0, 0, 0, 0, 0)],
-            _CSCHEMA,
+            COUNTERS_SCHEMA,
         )
 
     man = state.commit_round(
-        r, frontier, spark.createDataFrame([], _SSCHEMA),
-        spark.createDataFrame([], _FSCHEMA),
+        r, frontier, spark.createDataFrame([], SEEN_SCHEMA),
+        spark.createDataFrame([], FETCH_LOG_SCHEMA),
         spark.createDataFrame([], ARTICLES_SCHEMA),
         counters_builder=build_counters,
         bloom_shards=new_shards, bloom_mode=mode, seen_filter=be.name,
@@ -702,8 +649,6 @@ def build_robots_rules_cached(
     spark: SparkSession, pages_e: DataFrame, state_dir: str
 ) -> DataFrame:
     """Robots rule table, parsed once per state dir then read as parquet."""
-    import os
-
     path = f"{state_dir}/robots_rules"
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         R.build_robots_rules(pages_e).write.mode("overwrite").parquet(path)

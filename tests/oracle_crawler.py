@@ -244,7 +244,7 @@ class OracleCrawler:
                         q.url, body, corpus_lang=page["lang"]
                     )
                 # ---- discovery (children discovered in round r carry
-                # discovered_round = r, ≙ discover_children(ok, r-1))
+                # discovered_round = r, ≙ process.children_from_processed(processed, r-1))
                 for child, prio, d in discover_from_page(q.url, body, crawler, q.depth):
                     cq = _mk_req(child, prio, d, r, q.seed_host)
                     if cq.host != q.seed_host:          # B4 offsite

@@ -161,3 +161,32 @@ def test_curate_job_pre_gates(spark, tmp_path, capsys):
     assert summary["pre_gates_dropped"]["gopher"] == 1       # 50
     kept = read_training_shards(spark, out).select("doc_id").collect()
     assert {r["doc_id"] for r in kept} == set(range(6))
+
+
+def test_pages_input_without_url_filter_writes_no_url(spark, tmp_path, capsys):
+    """A pages corpus carries url through extraction, but only the
+    --url-filter gate needs it: without the flag the training shards
+    must not gain a url column."""
+    from datetime import datetime
+
+    html = ("<html><head><title>T{i}</title></head><body><article>"
+            + ("<p>the quick brown fox story paragraph with many common "
+               "words that the extractor keeps as body text.</p>") * 3
+            + "<p>unique sentence number {i} anchors the difference.</p>"
+            "</article></body></html>")
+    inp = str(tmp_path / "pages.parquet")
+    spark.createDataFrame(
+        [(f"https://ph{i}.example/a/{i}", datetime(2016, 5, 1 + i),
+          html.replace("{i}", str(i)).encode()) for i in range(4)],
+        "url string, warc_ts timestamp, html binary",
+    ).write.mode("overwrite").parquet(inp)
+
+    out = str(tmp_path / "shards")
+    main(["--input", inp, "--input-kind", "pages", "--out", out,
+          "--n-shards", "2", "--quality-min", "0.0"])
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert summary["input_kind"] == "pages"
+    assert summary["surviving_docs"] >= 1
+    got = read_training_shards(spark, out)
+    assert "url" not in got.columns
+    assert {"doc_id", "text"} <= set(got.columns)

@@ -16,7 +16,11 @@ from newscrawler_spark.functions.discover_core import (
     parse_rss,
     parse_sitemap,
 )
-from newscrawler_spark.operators.discover import discover_children, rss_items
+from newscrawler_spark.operators.discover import rss_items
+from newscrawler_spark.operators.process import (
+    children_from_processed,
+    process_pages,
+)
 from newscrawler_spark.sources.fixtures import (
     article_html,
     home_html,
@@ -101,17 +105,21 @@ def test_spark_discover_matches_core(spark):
     ]
     df = spark.createDataFrame(
         rows, "url string, html binary, crawler string, depth int, seed_host string"
+    ).select(
+        "*",
+        F.col("url").alias("url_canon"),
+        F.xxhash64("url").alias("url_hash"),
+        F.lit(None).cast("timestamp").alias("warc_ts"),
+        F.lit("en").alias("lang"),
     )
-    got = {
-        (r.url, r.priority, r.depth)
-        for r in discover_children(df, round_no=4).collect()
-    }
+    children = children_from_processed(process_pages(df), round_no=4)
+    got = {(r.url, r.priority, r.depth) for r in children.collect()}
     want = set()
     for url, blob, crawler, depth, _sh in rows:
         for u, p, d in discover_from_page(url, blob.decode(), crawler, depth):
             want.add((u, p, d))
     assert got == want
-    rr = discover_children(df, round_no=4).select("discovered_round").distinct().collect()
+    rr = children.select("discovered_round").distinct().collect()
     assert [r.discovered_round for r in rr] == [5]
 
 

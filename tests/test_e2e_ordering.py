@@ -117,18 +117,14 @@ def test_bloom_run_identical(spark, smoke_pages, smoke_seeds, engine_result):
 
 
 @pytest.mark.parametrize("overrides", [
-    {"fused_pipeline": False},
-    {"scratch_fetched": True},
-    {"broadcast_fetch_join": False},
-    {"materialize_candidates": True},
+    {"materialize_candidates_rows": 0},
 ])
 def test_nondefault_config_branches_identical(spark, smoke_pages, smoke_seeds,
                                               engine_result, overrides):
-    """Every physical-strategy toggle (unfused stats→gate→extract→discover
-    chain, scratch-parquet fetched set, shuffle fetch join, forced
-    candidate materialization) must reproduce the default run's fetch
-    log and seen set exactly — these branches previously had no e2e
-    wiring test."""
+    """The bulk path's round-local branches (candidate set materialized to
+    scratch parquet, distributed rank_in_host), forced from round one by a
+    zero threshold, must reproduce the default run's fetch log and seen
+    set exactly."""
     cfg = CFG.with_overrides(**overrides)
     with tempfile.TemporaryDirectory(prefix="crawl_cfgbr_") as d:
         res = run_crawl(spark, smoke_pages, smoke_seeds, d, cfg,

@@ -20,11 +20,11 @@ from newscrawler_spark.functions.extract_core import (
     page_stats,
     strip_tags,
 )
-from newscrawler_spark.operators.extract import extract_articles, with_is_current
-from newscrawler_spark.operators.heuristics import (
-    article_gate,
-    compile_condition,
-    with_page_stats,
+from newscrawler_spark.operators.extract import with_is_current
+from newscrawler_spark.operators.heuristics import compile_condition
+from newscrawler_spark.operators.process import (
+    articles_from_processed,
+    process_pages,
 )
 from newscrawler_spark.sources.fixtures import (
     TIERS,
@@ -118,22 +118,25 @@ def test_spark_stats_and_extract_pipeline(spark):
         html, truth = article_html(1, k, 40, 3)
         rows.append(
             (article_url(1, k), f"c{k}", k, datetime(2016, 5, 1), html.encode(), "en",
-             "recursive", truth)
+             "recursive", 1, "host01.example", truth)
         )
     rows.append(
         ("http://host01.example/section/0", "ch", 99, datetime(2016, 5, 1),
-         hub_html(1, 0, 40).encode(), "en", "recursive", None)
+         hub_html(1, 0, 40).encode(), "en", "recursive", 1, "host01.example",
+         None)
     )
     df = spark.createDataFrame(
         rows,
         "url string, url_canon string, url_hash long, warc_ts timestamp, "
-        "html binary, lang string, crawler string, truth string",
+        "html binary, lang string, crawler string, depth int, "
+        "seed_host string, truth string",
     )
-    stats = with_page_stats(df.drop("truth"))
-    gated = article_gate(stats, CrawlConfig())
-    arts = extract_articles(gated).collect()
+    cfg = CrawlConfig()
+    arts = articles_from_processed(
+        process_pages(df.drop("truth"), cfg), cfg
+    ).collect()
     assert len(arts) == 6  # hub filtered out
-    truth = {u: t for (u, _c, _h, _ts, _b, _l, _cr, t) in rows if t is not None}
+    truth = {r[0]: r[-1] for r in rows if r[-1] is not None}
     for r in arts:
         assert r.article_text == truth[r.url], r.url
         assert r.article_title

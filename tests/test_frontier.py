@@ -162,20 +162,25 @@ def test_enrich_plan_has_no_python_stage(spark):
     assert "Python" not in plan
 
 
+# a frontier size past any materialize_candidates_rows: schedule_round
+# takes the distributed rank (frontier_rows=None keeps the window form)
+BULK_ROWS = 10**12
+
+
 def test_distributed_rank_equals_window(spark, skew_frontier):
     """J4 — the distributed (range-slice + offsets) rank must reproduce
     the window form's candidate set and ranks EXACTLY, with and without
     the global cut."""
     for bs in (None, 100):
-        w_cfg = CrawlConfig(per_host_budget=7, batch_size=bs, distributed_rank=False)
-        d_cfg = CrawlConfig(per_host_budget=7, batch_size=bs, distributed_rank=True)
+        cfg = CrawlConfig(per_host_budget=7, batch_size=bs)
         want = sorted(
             (r.url_hash, r.rank_in_host)
-            for r in FR.schedule_round(skew_frontier, w_cfg).collect()
+            for r in FR.schedule_round(skew_frontier, cfg).collect()
         )
         got = sorted(
             (r.url_hash, r.rank_in_host)
-            for r in FR.schedule_round(skew_frontier, d_cfg).collect()
+            for r in FR.schedule_round(skew_frontier, cfg,
+                                       frontier_rows=BULK_ROWS).collect()
         )
         assert got == want
 
@@ -183,8 +188,8 @@ def test_distributed_rank_equals_window(spark, skew_frontier):
 def test_distributed_rank_unbounded_budget_is_identity(spark, skew_frontier):
     """Bulk (A7) mode: budget >= host size must keep every row, ranks
     gap-free 1..n per host without any final window."""
-    cfg = CrawlConfig(per_host_budget=10**9, batch_size=None, distributed_rank=True)
-    got = FR.schedule_round(skew_frontier, cfg)
+    cfg = CrawlConfig(per_host_budget=10**9, batch_size=None)
+    got = FR.schedule_round(skew_frontier, cfg, frontier_rows=BULK_ROWS)
     rows = got.collect()
     assert len(rows) == skew_frontier.count()
     by_host = {}
@@ -200,14 +205,16 @@ def test_distributed_rank_stable_across_evaluations(spark, skew_frontier):
     rank_in_host_distributed pins one slicing — repeated full evaluations
     must agree (this failed before the persist when AQE re-planned the
     scan between the offsets job and the main job)."""
-    cfg = CrawlConfig(per_host_budget=10**9, batch_size=None, distributed_rank=True)
+    cfg = CrawlConfig(per_host_budget=10**9, batch_size=None)
     a = sorted(
         (r.url_hash, r.rank_in_host)
-        for r in FR.schedule_round(skew_frontier, cfg).collect()
+        for r in FR.schedule_round(skew_frontier, cfg,
+                                   frontier_rows=BULK_ROWS).collect()
     )
     b = sorted(
         (r.url_hash, r.rank_in_host)
-        for r in FR.schedule_round(skew_frontier, cfg).collect()
+        for r in FR.schedule_round(skew_frontier, cfg,
+                                   frontier_rows=BULK_ROWS).collect()
     )
     assert a == b
 
@@ -217,7 +224,6 @@ def test_schedule_auto_switches_on_frontier_rows(spark, skew_frontier):
     choice; both sides of the switch give the same answer."""
     cfg = CrawlConfig(per_host_budget=7, batch_size=None,
                       materialize_candidates_rows=10)
-    assert cfg.distributed_rank is None
     small = FR.schedule_round(skew_frontier, cfg, frontier_rows=5)
     big = FR.schedule_round(skew_frontier, cfg, frontier_rows=10_000)
     key = lambda df: sorted((r.url_hash, r.rank_in_host) for r in df.collect())

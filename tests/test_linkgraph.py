@@ -203,3 +203,39 @@ def test_pagerank_rank_follows_in_degree_on_uniform_out(spark):
         spark.createDataFrame(edges, "src string, dst string"),
         iterations=3).collect()}
     assert got["hub"] > got["side"]
+
+
+def test_rank_bonus_does_not_compound(spark, smoke_pages_pd, smoke_seeds_pd,
+                                      tmp_path):
+    """The PageRank bonus is a schedule-time adjustment: rows that wait in
+    the frontier over several rounds, and retries re-queued from the
+    fetch log, must be committed without it, so no committed frontier row
+    ever exceeds its base priority plus the weight. A url's base priority
+    is its first committed retry-0 priority, minus one per retry."""
+    from newscrawler_spark.config import CrawlConfig
+    from newscrawler_spark.runner import run_crawl
+
+    weight = 5
+    cfg = CrawlConfig(per_host_budget=2, max_depth=3, round_seconds=1000.0,
+                      rank_priority_weight=weight)
+    res = run_crawl(spark, spark.createDataFrame(smoke_pages_pd),
+                    spark.createDataFrame(smoke_seeds_pd),
+                    str(tmp_path / "st"), cfg, max_rounds=6)
+    rows = [
+        (row["url_hash"], row["retry"], row["priority"])
+        for r in res.state.committed_rounds()
+        for row in res.state.read_frontier(r).select(
+            "url_hash", "retry", "priority").collect()
+    ]
+    base: dict[int, int] = {}
+    for h, retry, prio in rows:
+        if retry == 0:
+            base.setdefault(h, prio)
+    # the run must exercise both ways a bonus could be carried forward
+    waits: dict[int, int] = {}
+    for h, retry, _p in rows:
+        waits[h] = waits.get(h, 0) + (retry == 0)
+    assert max(waits.values()) >= 3
+    assert max(retry for _h, retry, _p in rows) >= 1
+    for h, retry, prio in rows:
+        assert prio <= base[h] - retry + weight, (h, retry, prio, base[h])
