@@ -60,12 +60,9 @@ class CrawlConfig:
     salt_buckets: int = 8
     seen_buckets: int = 32            # bucket(url_hash) shard count
     bloom_bits_per_key: int = 10      # ~1% fpp
-    use_bloom_prefilter: bool = True
-    # which probabilistic seen-filter backs the prefilter: "bloom"
-    # (default; cheapest bits/key) or "cuckoo" (16-bit fingerprints,
-    # ~50x lower FP rate, supports evict-to-recrawl deletion). Both are
-    # exact-confirmed, so the dedup RESULT is identical either way.
-    seen_filter: str = "bloom"
+    # The crawl's seen prefilter is Bloom (operators/seen.py), switched
+    # by run_crawl(use_bloom=...). It is exact-confirmed, so the dedup
+    # RESULT equals the plain anti-join.
     # Bloom pays its per-round shard fold + probe only once the seen set
     # is large; below this row count the exact anti-join alone is faster
     # (the filter exists for 10^8-10^10 keys, not 10^4). Crossing the

@@ -1,17 +1,13 @@
-"""Partitioned cuckoo-filter URL-seen set (SURVEY.md §3 J / B3 scale path,
-the "cuckoo" half of the north rule's "Bloom/cuckoo URL-seen").
+"""Partitioned cuckoo-filter URL-seen set: the operator behind
+contract query q50 (prefilter + exact confirm ≡ the SQL anti-join).
 
-Same sharding contract as the Bloom backend (operators/seen.py): one
-filter row per ``bucket = pmod(url_hash, seen_buckets)``, built and
-probed executor-side in grouped/cogrouped pandas UDFs, never on the
-driver. What cuckoo buys over Bloom at 10^10 URLs:
-
-- **deletion**: a fingerprint can be REMOVED, so evict-to-recrawl (an
-  RSS feed says a stored article changed -> make its URL fetchable
-  again) is an O(1) filter update instead of a full shard rebuild —
-  Bloom bits cannot be unset;
-- comparable space (16-bit fingerprints at ~0.75 load ≈ 21 bits/key
-  here vs Bloom's 10) for a ~0.02% FP rate vs Bloom's ~1%.
+The crawl engine's seen prefilter is Bloom only (operators/seen.py); this
+module is the cuckoo tier of the same sharding contract, kept for the
+contract query and its ``bench.py`` timing. One filter row per
+``bucket = pmod(url_hash, seen_buckets)``, built and probed
+executor-side in grouped/cogrouped pandas UDFs, never on the driver.
+Fingerprints are never deleted. :func:`update_cuckoo_shards` (the
+O(|delta|) fold) stays so the per-layer tracer keeps its patch list.
 
 Layout per shard: a ``(nb, slots)`` uint16 fingerprint table (nb a
 power of two so the partial-key XOR trick is an involution:
@@ -19,22 +15,17 @@ power of two so the partial-key XOR trick is an involution:
 overflow STASH of (index, fp) pairs for keys whose eviction walk
 exceeds ``max_kicks``. The stash is what makes "no false negatives for
 inserted keys" unconditional — a standard cuckoo filter fails the
-insert instead; here saturation is reported via stats
-(:func:`cuckoo_saturated`) and the caller schedules a rebuild, exactly
-the Bloom saturation protocol.
+insert instead.
 
 Build is vectorized: each round of the two-choice placement assigns
 slots for ALL keys of a batch with one argsort + group-cumcount (no
 per-key Python until the residual eviction walks, which touch only the
 overflow tail at 0.75 design load). Probe is pure numpy gather+compare.
 
-False positives are removed downstream by the same exact anti-join
-confirm as Bloom (:func:`cuckoo_dedup` ≡ ``dedup_against_seen``, tested
-in tests/test_seen_cuckoo.py). Deletion CAN introduce false negatives
-for a *different* key that shares (index, fp) with the deleted one —
-at 16-bit fp this is the documented ~2^-16-per-bucket-pair event; for
-seen-dedup a false negative only means one URL is re-fetchable, which
-is the intended semantics of eviction, never a correctness break.
+False positives (16-bit fingerprints: ~0.02% vs Bloom's ~1%) are
+removed downstream by the same exact anti-join confirm as Bloom
+(:func:`cuckoo_dedup` ≡ ``dedup_against_seen``, tested in
+tests/test_seen_cuckoo.py).
 """
 
 from __future__ import annotations
@@ -171,13 +162,6 @@ def _load_shard(shd: pd.Series) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return tab, sidx, sfp
 
 
-def _compact(tab: np.ndarray) -> np.ndarray:
-    """Left-pack each bucket's fingerprints (deletes leave holes; the
-    vectorized placement assumes slot ``fill[b]`` is the first free one)."""
-    order = np.argsort(tab == 0, axis=1, kind="stable")
-    return np.take_along_axis(tab, order, axis=1)
-
-
 _COLS = ["bucket", "tab", "nb", "slots", "stash_idx", "stash_fp", "n_keys"]
 
 
@@ -260,8 +244,7 @@ def update_cuckoo_shards(
     old_shards: DataFrame, delta: DataFrame, cfg: CrawlConfig
 ) -> DataFrame:
     """Fold a url_hash delta into existing shards — O(|delta|) per round,
-    table geometry frozen at first build (overflow goes to the stash and
-    trips :func:`cuckoo_saturated` -> caller rebuilds, as with Bloom)."""
+    table geometry frozen at first build (overflow goes to the stash)."""
 
     def merge(old: pd.DataFrame, new: pd.DataFrame) -> pd.DataFrame:
         if new.empty:
@@ -275,7 +258,6 @@ def update_cuckoo_shards(
         row = old.iloc[0]
         bucket = int(row["bucket"])
         tab, sidx, sfp = _load_shard(row)
-        tab = _compact(tab)
         stash = list(zip(sidx.tolist(), sfp.tolist()))
         fill = (tab != 0).sum(axis=1).astype(np.int64)
         fp, i1, i2 = _indices(hashes, tab.shape[0])
@@ -288,61 +270,4 @@ def update_cuckoo_shards(
         old_shards.groupBy("bucket")
         .cogroup(d.groupBy("bucket"))
         .applyInPandas(merge, schema=SHARD_SCHEMA)
-    )
-
-
-def delete_from_shards(
-    shards: DataFrame, evict: DataFrame, cfg: CrawlConfig
-) -> DataFrame:
-    """Remove one fingerprint per evicted url_hash — the operation Bloom
-    cannot do. Use: F1 re-crawl eviction (make a changed URL fetchable
-    again without rebuilding the seen filter). A key never inserted is a
-    silent no-op (delete only acts on a matching fingerprint)."""
-
-    def drop(old: pd.DataFrame, ev: pd.DataFrame) -> pd.DataFrame:
-        if old.empty:
-            return pd.DataFrame(columns=_COLS)
-        row = old.iloc[0]
-        if ev.empty:
-            return old[_COLS]
-        tab, sidx, sfp = _load_shard(row)
-        stash = list(zip(sidx.tolist(), sfp.tolist()))
-        hashes = ev["url_hash"].to_numpy(dtype=np.int64)
-        fp, i1, i2 = _indices(hashes, tab.shape[0])
-        removed = 0
-        for j in range(len(hashes)):
-            done = False
-            for idx in (int(i1[j]), int(i2[j])):
-                hits = np.flatnonzero(tab[idx] == fp[j])
-                if len(hits):
-                    tab[idx, hits[0]] = 0
-                    done = True
-                    break
-            if not done and (int(i1[j]), int(fp[j])) in stash:
-                stash.remove((int(i1[j]), int(fp[j])))
-                done = True
-            if not done and (int(i2[j]), int(fp[j])) in stash:
-                stash.remove((int(i2[j]), int(fp[j])))
-                done = True
-            removed += int(done)
-        n = max(0, int(row["n_keys"]) - removed)
-        return pd.DataFrame(
-            [_shard_row(int(row["bucket"]), tab, stash, n)], columns=_COLS)
-
-    e = evict.select("url_hash").withColumn("bucket", _bucket_expr(cfg))
-    return (
-        shards.groupBy("bucket")
-        .cogroup(e.groupBy("bucket"))
-        .applyInPandas(drop, schema=SHARD_SCHEMA)
-    )
-
-
-def cuckoo_saturated(stats: list[dict]) -> bool:
-    """Rebuild rule: any shard past 90% of table capacity or carrying a
-    non-empty stash (an eviction walk already failed). Correctness never
-    depends on this — positives are exact-confirmed, and stash entries
-    keep inserted keys FN-free — it bounds FP rate and stash growth."""
-    return any(
-        s["n_keys"] > 0.9 * s["nb"] * s["slots"] or s["stash_len"] > 0
-        for s in stats
     )

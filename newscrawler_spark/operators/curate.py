@@ -587,6 +587,10 @@ def dsir_importance(
     order-independent, bit-identical at any parallelism / cluster size
     (a float sum would drift with partition order and flake a value-hash
     compare; the only float op left is one ln per BUCKET, 2·B total).
+    That op keeps one last-ulp exposure across engines: JVM ``Math.log``
+    and DuckDB's ``ln`` are not guaranteed to round identically, so a
+    bucket weight that lands exactly on a .5 micro-nat boundary can
+    round to different integers, and q74's value hash would differ.
 
     Returns (id, n_feats, score_fp) — one row per document with ≥ 1
     feature (empty texts have no bag and so no score, like

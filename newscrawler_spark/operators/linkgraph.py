@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame, functions as F
 # first /, :, ?, or # — ports and paths excluded. Lowercased; one
 # leading "www." stripped (functions/canon.py's host rule).
 _ABS_HOST_RE = r"^https?://([^/:?#]+)"
+# absolute href of an <a> tag (Java regex twin of discover_core._A_HREF_RE)
+_ABS_HREF_RE = r"""(?i)<a\b[^>]*?href\s*=\s*["'](https?://[^"'\s>]+)["']"""
 
 
 def _host_of(url_col):
@@ -50,12 +52,12 @@ def host_edges_from_pages(
     Only ABSOLUTE hrefs can leave a host, so relative links are ignored
     and same-host absolute links are dropped as self-edges; hosts are
     lowercased with a leading www. stripped (the canon.py host rule).
-    The html binary column is decoded as UTF-8 (Spark's binary→string
-    cast), matching DuckDB's decode() for the oracle twin.
+    Anchors are matched like functions/discover_core's ``_A_HREF_RE``:
+    any tag case, single or double quotes, whitespace around ``=``. The
+    html binary column is decoded as UTF-8 (Spark's binary→string cast).
     """
-    hrefs = F.expr(
-        f"regexp_extract_all(cast({html_col} as string), "
-        "'<a [^>]*href=\"(https?://[^\"]+)\"', 1)"
+    hrefs = F.regexp_extract_all(
+        F.col(html_col).cast("string"), F.lit(_ABS_HREF_RE), F.lit(1)
     )
     e = pages.select(
         _host_of(F.col(url_col)).alias("src_host"),

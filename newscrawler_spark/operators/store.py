@@ -120,7 +120,6 @@ class CrawlState:
         counters_builder=None,
         bloom_shards: DataFrame | None = None,
         bloom_mode: str | None = None,
-        seen_filter: str = "bloom",
         seen_evict: DataFrame | None = None,
     ) -> dict:
         """One transactional checkpoint (A11/G2): all tables land under
@@ -193,7 +192,7 @@ class CrawlState:
         if bloom_shards is not None:
             man["bloom"] = {
                 "mode": bloom_mode or "unknown",
-                "backend": seen_filter,
+                "backend": "bloom",
                 "delta_rows": counts["seen_delta"],
             }
         fd, tmp = tempfile.mkstemp(dir=rd, prefix="_MANIFEST", suffix=".tmp")
@@ -223,26 +222,25 @@ class CrawlState:
     # --------------------------------------------------- bloom shards
 
     def read_bloom_shards(self, r: int | None = None) -> DataFrame | None:
-        """Persisted seen-set Bloom shards of round ``r`` (None if that
-        round predates shard persistence — caller rebuilds once)."""
+        """Persisted seen-set Bloom shards of round ``r``. None if that
+        round predates shard persistence, or if its manifest records a
+        non-Bloom filter backend (a state dir written by the retired
+        cuckoo path) — the caller rebuilds once."""
         r = self.latest_round() if r is None else r
         if r is None:
             return None
         path = os.path.join(self._round_dir(r), "bloom_shards")
         if not os.path.exists(os.path.join(path, "_SUCCESS")):
             return None
+        if self.manifest(r).get("bloom", {}).get("backend", "bloom") != "bloom":
+            return None
         return self.spark.read.parquet(path)
 
     def bloom_shard_stats(self, r: int | None = None) -> list[dict]:
-        """Per-bucket shard stats — read driver-side from the parquet
-        columns WITHOUT touching the bitset/table blobs and without a
-        Spark job (32 tiny rows; feeds the saturation/rebuild rule).
-
-        Backend-agnostic: every non-binary column is returned (Bloom:
-        bucket/m/k/n_keys; cuckoo: bucket/nb/slots/n_keys), plus
-        ``stash_len`` derived from the cuckoo stash blob's byte length
-        (2 bytes per uint16 fingerprint) when that column exists."""
-        import pyarrow as pa
+        """Per-bucket shard stats (bucket/m/k/n_keys) — read driver-side
+        from the parquet columns WITHOUT touching the bitset blobs and
+        without a Spark job (32 tiny rows; feeds the saturation/rebuild
+        rule)."""
         import pyarrow.parquet as pq
 
         r = self.latest_round() if r is None else r
@@ -253,33 +251,11 @@ class CrawlState:
             return []
         out = []
         for name in os.listdir(path):
-            if not name.endswith(".parquet"):
-                continue
-            schema = pq.read_schema(os.path.join(path, name))
-            small = [f.name for f in schema
-                     if not (pa.types.is_binary(f.type)
-                             or pa.types.is_large_binary(f.type))]
-            want = small + (["stash_fp"] if "stash_fp" in schema.names else [])
-            t = pq.read_table(os.path.join(path, name), columns=want)
-            for row in t.to_pylist():
-                fp = row.pop("stash_fp", None)
-                if fp is not None:
-                    row["stash_len"] = len(fp) // 2
-                out.append(row)
+            if name.endswith(".parquet"):
+                out.extend(pq.read_table(
+                    os.path.join(path, name),
+                    columns=["bucket", "m", "k", "n_keys"]).to_pylist())
         return out
-
-    def shard_backend(self, r: int | None = None) -> str | None:
-        """Which seen-filter backend wrote round ``r``'s shards (from the
-        manifest; 'bloom' for pre-backend-field manifests; None when the
-        round committed no shards)."""
-        r = self.latest_round() if r is None else r
-        if r is None:
-            return None
-        man = self.manifest(r)
-        blk = man.get("bloom")
-        if blk is None:
-            return None
-        return blk.get("backend", "bloom")
 
     # --------------------------------------------------- seen ledger
 

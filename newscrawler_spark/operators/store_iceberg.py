@@ -239,7 +239,6 @@ class IcebergCrawlState:
         counters_builder=None,
         bloom_shards: DataFrame | None = None,
         bloom_mode: str | None = None,
-        seen_filter: str = "bloom",
         seen_evict: DataFrame | None = None,
     ) -> dict:
         rd = F.lit(r).cast("int").alias("fetch_round")
@@ -285,7 +284,7 @@ class IcebergCrawlState:
         man = {"run_id": self.run_id, "round": r, "row_counts": counts}
         if bloom_shards is not None:
             man["bloom"] = {"mode": bloom_mode or "unknown",
-                            "backend": seen_filter,
+                            "backend": "bloom",
                             "delta_rows": counts["seen_delta"]}
         self._manifests = getattr(self, "_manifests", {})
         self._manifests[r] = man
@@ -406,19 +405,6 @@ class IcebergCrawlState:
             .where(F.col("fetch_round") == r).drop("fetch_round")
         )
         return df if df.take(1) else None
-
-    def shard_backend(self, r: int | None = None) -> str | None:
-        """Backend that wrote round ``r``'s shards. The Iceberg DDL pins
-        the Bloom SHARD_SCHEMA (a cuckoo shard row cannot land in that
-        table), so this is 'bloom' whenever shards exist for the round."""
-        r = self.latest_round() if r is None else r
-        if r is None:
-            return None
-        man = getattr(self, "_manifests", {}).get(r)
-        if man is not None:
-            blk = man.get("bloom")
-            return None if blk is None else blk.get("backend", "bloom")
-        return "bloom" if self.read_bloom_shards(r) is not None else None
 
     def bloom_shard_stats(self, r: int | None = None) -> list[dict]:
         r = self.latest_round() if r is None else r

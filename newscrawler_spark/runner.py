@@ -41,7 +41,7 @@ from newscrawler_spark.operators import frontier as FR
 from newscrawler_spark.operators import linkgraph as LG
 from newscrawler_spark.operators import process as P
 from newscrawler_spark.operators import robots as R
-from newscrawler_spark.operators.seen_backend import backend_for
+from newscrawler_spark.operators import seen as SN
 from newscrawler_spark.operators.extract import ARTICLES_SCHEMA
 from newscrawler_spark.operators.store import (
     COUNTERS_SCHEMA,
@@ -159,13 +159,14 @@ def run_crawl(
     cfg: CrawlConfig = DEFAULT_CONFIG,
     max_rounds: int = 50,
     run_id: str = "run",
-    use_bloom: bool | None = None,
+    use_bloom: bool = True,
     extra_frontier: DataFrame | None = None,
 ) -> CrawlResult:
     """EP1 — full crawl (resumes automatically from the last committed
-    round in ``state_dir``; see tests/test_resume.py)."""
-    use_bloom = cfg.use_bloom_prefilter if use_bloom is None else use_bloom
-    be = backend_for(cfg)  # bloom (default) or cuckoo seen-filter
+    round in ``state_dir``; see tests/test_resume.py).
+
+    ``use_bloom=False`` turns off the Bloom seen prefilter: every round
+    then dedups children with the exact anti-join alone."""
     from newscrawler_spark.operators.store import make_state
 
     state = make_state(spark, state_dir, run_id=run_id)
@@ -228,11 +229,10 @@ def run_crawl(
             0, boot, boot.select("url_hash"), empty_log,
             empty_articles, empty_counters,
             bloom_shards=(
-                be.build_shards(boot.select("url_hash"), cfg)
+                SN.build_bloom_shards(boot.select("url_hash"), cfg)
                 if boot_bloom else None
             ),
             bloom_mode="rebuild" if boot_bloom else None,
-            seen_filter=be.name,
         )
         boot.unpersist()
         last = 0
@@ -271,14 +271,10 @@ def run_crawl(
         )
 
     # Persisted Bloom shards: read the snapshot committed with the last
-    # round (covers seen(last)); None on a pre-shard-format state dir or
-    # while below the activation threshold — rebuilt once on activation,
-    # then maintained incrementally.
+    # round (covers seen(last)); None on a pre-shard-format or non-Bloom
+    # state dir or while below the activation threshold — rebuilt once
+    # on activation, then maintained incrementally.
     shards = state.read_bloom_shards(last) if use_bloom else None
-    if shards is not None and state.shard_backend(last) not in (None, be.name):
-        # state dir written by the OTHER filter backend: shard schemas
-        # differ, so force one rebuild; maintenance is incremental after
-        shards = None
     seen_total = sum(
         state.manifest(x)["row_counts"]["seen_delta"]
         for x in state.committed_rounds()
@@ -449,14 +445,14 @@ def run_crawl(
             # from the full seen set ONLY when absent (legacy state dir)
             # or past the saturation rule — at 10^10 URLs the difference
             # is a ~12 GB shard fold vs re-hashing the whole ledger.
-            if shards is None or be.saturated(
-                state.bloom_shard_stats(r - 1), cfg
+            if shards is None or SN.shards_saturated(
+                state.bloom_shard_stats(r - 1), cfg.bloom_bits_per_key
             ):
-                shards = be.build_shards(seen_df, cfg)
+                shards = SN.build_bloom_shards(seen_df, cfg)
                 bloom_mode = "rebuild"
             else:
                 bloom_mode = "incremental"
-            children = be.dedup_with_shards(
+            children = SN.bloom_dedup_with_shards(
                 gated_children, seen_df, shards, cfg
             )
         else:
@@ -534,11 +530,10 @@ def run_crawl(
                 r, new_frontier, seen_delta, fetch_log, articles,
                 counters_builder=build_counters,
                 bloom_shards=(
-                    be.update_shards(shards, seen_delta, cfg)
+                    SN.update_bloom_shards(shards, seen_delta, cfg)
                     if eff_bloom else None
                 ),
                 bloom_mode=bloom_mode,
-                seen_filter=be.name,
             )
         seen_total += man["row_counts"]["seen_delta"]
         if eff_bloom:
@@ -568,18 +563,16 @@ def evict_to_recrawl(
     urls: DataFrame,
     cfg: CrawlConfig = DEFAULT_CONFIG,
 ) -> dict:
-    """F1 evict-to-recrawl: make previously-fetched URLs fetchable again
-    (the deletion capability of the cuckoo seen-filter, north rule
-    "Bloom/cuckoo"). One committed eviction round:
+    """F1 evict-to-recrawl: make previously-fetched URLs fetchable again.
+    One committed eviction round:
 
     1. tombstones the url_hashes in the seen ledger (``seen_evict``
        table; ``read_seen`` excludes them until a later re-fetch
        re-adds them — see ``CrawlState.read_seen``);
-    2. cuckoo backend: deletes their fingerprints from the persisted
-       shards — O(|evict|), the operation Bloom bits cannot express.
-       Bloom backend: shards are carried forward unchanged; the now-
-       stale positive routes the URL through the exact confirm, which
-       the tombstoned ledger lets pass — identical crawl results, one
+    2. carries the last round's Bloom shards forward unchanged
+       (``evict-carry``; Bloom bits cannot be unset). The now-stale
+       positive routes an evicted URL through the exact confirm, which
+       admits it because the tombstoned ledger no longer holds it — one
        extra confirm-join row per evicted URL until the next rebuild;
     3. re-enqueues the URLs as seed-priority frontier rows, so the next
        ``run_crawl`` round re-fetches them and re-adds them to the
@@ -595,7 +588,6 @@ def evict_to_recrawl(
     last = state.latest_round()
     if last is None:
         raise ValueError("evict_to_recrawl needs a committed crawl state")
-    be = backend_for(cfg)
     rows = download_list_frontier(urls).persist()
     if not rows.take(1):
         rows.unpersist()
@@ -607,14 +599,6 @@ def evict_to_recrawl(
         state.read_frontier(last).unionByName(rows.select(*FR.FRONTIER_COLS))
     )
     shards = state.read_bloom_shards(last)
-    new_shards, mode = None, None
-    if shards is not None:
-        if state.shard_backend(last) == "cuckoo" and be.name == "cuckoo":
-            from newscrawler_spark.operators.cuckoo import delete_from_shards
-
-            new_shards, mode = delete_from_shards(shards, evict, cfg), "evict-delete"
-        else:
-            new_shards, mode = shards, "evict-carry"
     r = last + 1
 
     def build_counters(counts: dict):
@@ -628,7 +612,7 @@ def evict_to_recrawl(
         spark.createDataFrame([], FETCH_LOG_SCHEMA),
         spark.createDataFrame([], ARTICLES_SCHEMA),
         counters_builder=build_counters,
-        bloom_shards=new_shards, bloom_mode=mode, seen_filter=be.name,
+        bloom_shards=shards, bloom_mode="evict-carry",
         seen_evict=evict,
     )
     rows.unpersist()

@@ -138,9 +138,9 @@ def recrawl_evict_once(
     changed items in place (:func:`recrawl_rss_once`), EVICT them from
     the seen set so the next crawl round re-FETCHES them through the
     full pipeline (robots gate, heuristics, extraction, versioned
-    store). This is the flow that exercises the cuckoo filter's
-    deletion: the changed URLs' fingerprints are removed from the
-    persisted shards in O(|changed|), no rebuild.
+    store). The Bloom seen shards are carried forward unchanged: an
+    evicted URL still probes positive, and the exact confirm admits it
+    because the tombstoned ledger no longer holds it.
 
     Returns the eviction round's manifest (``row_counts['seen_evict']``
     = number of URLs made re-fetchable), or None when nothing changed

@@ -22,8 +22,7 @@ FIELDS = {
     "materialize_candidates_rows", "corpus_buckets",
     # scale path
     "hot_host_threshold", "salt_buckets", "seen_buckets",
-    "bloom_bits_per_key", "use_bloom_prefilter", "seen_filter",
-    "bloom_min_seen_rows", "compact_seen_every",
+    "bloom_bits_per_key", "bloom_min_seen_rows", "compact_seen_every",
     # link-graph frontier signal
     "rank_priority_weight", "rank_iterations",
     # seeds
@@ -33,10 +32,12 @@ FIELDS = {
 
 def test_field_set_is_pinned():
     names = [f.name for f in fields(CrawlConfig)]
-    assert len(names) == 23
+    assert len(names) == 21
     assert set(names) == FIELDS
 
 
-def test_deleted_strategy_knob_is_rejected():
+@pytest.mark.parametrize(
+    "knob", ["fused_pipeline", "seen_filter", "use_bloom_prefilter"])
+def test_deleted_strategy_knob_is_rejected(knob):
     with pytest.raises(TypeError):
-        CrawlConfig(fused_pipeline=False)
+        CrawlConfig(**{knob: False})

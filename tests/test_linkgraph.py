@@ -114,6 +114,33 @@ def test_host_edges_match_python_extractor(spark, smoke_pages_pd):
     assert len(got) > 0
 
 
+def test_host_edges_tolerate_tag_case_quotes_and_spacing(spark):
+    """Real-world anchor spellings the fixture corpus never uses: an
+    upper-case tag with a single-quoted href, and an attribute before a
+    spaced ``href = "..."`` — the tolerance of discover_core's
+    ``_A_HREF_RE``."""
+    html = (
+        "<html><body>"
+        "<A HREF='http://b.example/x'>b</A>"
+        '<a class="k" href = "http://c.example/">c</a>'
+        '<a href="http://d.example/">d</a>'
+        "</body></html>"
+    )
+    pages = spark.createDataFrame(
+        [("http://a.example/", bytearray(html.encode()))],
+        "url string, html binary",
+    )
+    got = {
+        (r["src_host"], r["dst_host"])
+        for r in host_edges_from_pages(pages).collect()
+    }
+    assert got == {
+        ("a.example", "b.example"),
+        ("a.example", "c.example"),
+        ("a.example", "d.example"),
+    }
+
+
 def test_priority_from_rank_bonus_bounded(spark):
     edges = [("a", "b"), ("b", "c"), ("c", "a"), ("a", "c")]
     ranks = pagerank_fixed_point(

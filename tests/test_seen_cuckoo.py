@@ -1,7 +1,9 @@
-"""Cuckoo-filter seen-set shards (SURVEY.md §3 J / north rule
-"Bloom/cuckoo"): exact equivalence to the anti-join, no false negatives
-for inserted keys (stash makes this unconditional), delta folds, and the
-capability Bloom lacks — deletion / evict-to-recrawl."""
+"""Cuckoo-filter seen-set shards (SURVEY.md §3 J, contract query q50):
+exact equivalence to the anti-join, no false negatives for inserted keys
+(stash makes this unconditional) and delta folds. The crawl engine
+prefilters with Bloom only; the last e2e test pins that a state dir
+whose shards were written by the retired cuckoo crawl path resumes with
+one Bloom rebuild."""
 
 from __future__ import annotations
 
@@ -18,9 +20,7 @@ from newscrawler_spark.operators.cuckoo import (
     _sizing,
     build_cuckoo_shards,
     cuckoo_dedup,
-    cuckoo_saturated,
     cuckoo_split,
-    delete_from_shards,
     update_cuckoo_shards,
 )
 from newscrawler_spark.operators.frontier import dedup_against_seen
@@ -123,53 +123,6 @@ def test_incremental_update_equals_rebuild(spark, big_sets):
     assert all(r.maybe_seen for r in probed4)
 
 
-def test_delete_makes_url_fetchable_again(spark, big_sets):
-    """The cuckoo-only capability: evicting a URL from the filter makes it
-    pass the prefilter as definitely-new (recrawl semantics). Survivors
-    keep their no-FN guarantee."""
-    seen_h, _ = big_sets
-    evicted, kept = seen_h[:500], seen_h[500:]
-    shards = build_cuckoo_shards(_seen_df(spark, seen_h), CFG)
-    shards2 = delete_from_shards(shards, _seen_df(spark, evicted), CFG)
-
-    probed_kept = cuckoo_split(_links_df(spark, kept), shards2, CFG).collect()
-    assert all(r.maybe_seen for r in probed_kept)
-
-    probed_ev = cuckoo_split(_links_df(spark, evicted), shards2, CFG).collect()
-    # a shared-fingerprint collision can leave the odd evicted key still
-    # positive (documented ~2^-16-scale event); the overwhelming majority
-    # must now read fresh
-    still = sum(1 for r in probed_ev if r.maybe_seen)
-    assert still <= 2
-    # deleting a never-inserted key is a no-op for everyone else
-    shards3 = delete_from_shards(
-        shards2, _seen_df(spark, [10**9 + 7]), CFG)
-    probed3 = cuckoo_split(_links_df(spark, kept), shards3, CFG).collect()
-    assert all(r.maybe_seen for r in probed3)
-
-
-def test_insert_after_delete_reuses_slots(spark, big_sets):
-    """delete → fold cycle (the steady-state recrawl loop): re-inserting
-    the evicted keys restores membership and n_keys accounting."""
-    seen_h, _ = big_sets
-    evicted = seen_h[:500]
-    shards = build_cuckoo_shards(_seen_df(spark, seen_h), CFG)
-    shards = delete_from_shards(shards, _seen_df(spark, evicted), CFG)
-    shards = update_cuckoo_shards(shards, _seen_df(spark, evicted), CFG)
-    probed = cuckoo_split(_links_df(spark, seen_h), shards, CFG).collect()
-    assert all(r.maybe_seen for r in probed)
-    assert sum(r.n_keys for r in shards.collect()) == len(seen_h)
-
-
-def test_saturation_rule():
-    assert not cuckoo_saturated(
-        [{"n_keys": 100, "nb": 64, "slots": 4, "stash_len": 0}])
-    assert cuckoo_saturated(
-        [{"n_keys": 240, "nb": 64, "slots": 4, "stash_len": 0}])
-    assert cuckoo_saturated(
-        [{"n_keys": 10, "nb": 64, "slots": 4, "stash_len": 1}])
-
-
 def _log(state):
     rows = state.read_fetch_log().orderBy(
         "fetch_round", "host", "rank_in_host").collect()
@@ -177,47 +130,38 @@ def _log(state):
              r.url_hash, r.status) for r in rows]
 
 
-def test_e2e_crawl_cuckoo_equals_bloom(spark, smoke_pages, smoke_seeds):
-    """Full crawl with seen_filter='cuckoo' (filter active from round 1)
-    produces the identical fetch log and seen set as the Bloom run —
-    the backend choice is invisible to crawl semantics."""
-    import tempfile
-
-    from newscrawler_spark.runner import run_crawl
-
-    base = CrawlConfig(per_host_budget=5, max_depth=3, bloom_min_seen_rows=0)
-    logs, seens = [], []
-    for flt in ("bloom", "cuckoo"):
-        cfg = CrawlConfig(**{**base.__dict__, "seen_filter": flt})
-        with tempfile.TemporaryDirectory(prefix=f"crawl_{flt}_") as d:
-            res = run_crawl(spark, smoke_pages, smoke_seeds, d, cfg,
-                            max_rounds=6)
-            logs.append(_log(res.state))
-            seens.append({r.url_hash for r in res.state.read_seen().collect()})
-            assert res.state.shard_backend() == flt
-    assert logs[0] == logs[1]
-    assert seens[0] == seens[1]
-
-
 def test_e2e_backend_switch_on_resume(spark, smoke_pages, smoke_seeds):
-    """A state dir written with Bloom shards, resumed with
-    seen_filter='cuckoo': one rebuild, then identical crawl results to an
-    uninterrupted Bloom run (the mismatch guard in the runner)."""
+    """A legacy state dir whose last round holds cuckoo shards (the
+    manifest records ``backend: cuckoo``) resumes with one Bloom rebuild
+    and then matches an uninterrupted Bloom run (the guard in
+    ``CrawlState.read_bloom_shards``)."""
+    import json
+    import os
     import tempfile
 
     from newscrawler_spark.runner import run_crawl
 
-    base = CrawlConfig(per_host_budget=5, max_depth=3, bloom_min_seen_rows=0)
+    cfg = CrawlConfig(per_host_budget=5, max_depth=3, bloom_min_seen_rows=0)
     with tempfile.TemporaryDirectory(prefix="crawl_ref_") as d:
-        ref = run_crawl(spark, smoke_pages, smoke_seeds, d, base, max_rounds=6)
+        ref = run_crawl(spark, smoke_pages, smoke_seeds, d, cfg, max_rounds=6)
         want = _log(ref.state)
-    cuckoo_cfg = CrawlConfig(**{**base.__dict__, "seen_filter": "cuckoo"})
-    with tempfile.TemporaryDirectory(prefix="crawl_switch_") as d:
-        run_crawl(spark, smoke_pages, smoke_seeds, d, base, max_rounds=3)
-        res = run_crawl(spark, smoke_pages, smoke_seeds, d, cuckoo_cfg,
-                        max_rounds=3)
+    with tempfile.TemporaryDirectory(prefix="crawl_legacy_") as d:
+        state = run_crawl(spark, smoke_pages, smoke_seeds, d, cfg,
+                          max_rounds=3).state
+        assert state.latest_round() == 3
+        rd = os.path.join(d, "round=3")
+        build_cuckoo_shards(state.read_seen(3), cfg).write.mode(
+            "overwrite").parquet(os.path.join(rd, "bloom_shards"))
+        man_path = os.path.join(rd, "_MANIFEST.json")
+        with open(man_path) as f:
+            man = json.load(f)
+        man["bloom"]["backend"] = "cuckoo"
+        with open(man_path, "w") as f:
+            json.dump(man, f, indent=1)
+
+        res = run_crawl(spark, smoke_pages, smoke_seeds, d, cfg, max_rounds=3)
         assert _log(res.state) == want
-        assert res.state.shard_backend() == "cuckoo"
+        assert res.state.manifest(4)["bloom"]["mode"] == "rebuild"
 
 
 def test_kernel_high_load_stash_keeps_fn_free():
