@@ -65,6 +65,27 @@ COUNTERS_SCHEMA = (
 )
 
 
+def local_table(spark: SparkSession, rows: list, schema: str) -> DataFrame:
+    """Driver rows (tuples in ``schema`` order) → a JVM ``LocalRelation``.
+
+    The rows go to the JVM as one Arrow table, so scanning or
+    broadcasting the result runs no Python worker. ``createDataFrame``
+    on a Python list instead parallelizes a pickled RDD, and every job
+    that scans it pays Python tasks — for tables of a few rows."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(struct)
+    cols = list(zip(*rows)) if rows else [[] for _ in struct.fields]
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)
+
+
 def _parquet_rows(path: str) -> int:
     """Row count from parquet footers (pyarrow, driver-side) — a Spark
     count() job per table per round is pure scheduler overhead."""
@@ -209,14 +230,14 @@ class CrawlState:
     def _read_deltas(self, table: str, upto: int | None, schema: str) -> DataFrame:
         rounds = [r for r in self.committed_rounds() if upto is None or r <= upto]
         if not rounds:
-            return self.spark.createDataFrame([], schema)
+            return local_table(self.spark, [], schema)
         paths = [os.path.join(self._round_dir(r), table) for r in rounds]
         return self.spark.read.schema(schema).parquet(*paths)
 
     def read_frontier(self, r: int | None = None) -> DataFrame:
         r = self.latest_round() if r is None else r
         if r is None:
-            return self.spark.createDataFrame([], FRONTIER_SCHEMA)
+            return local_table(self.spark, [], FRONTIER_SCHEMA)
         return self._read(r, "frontier")
 
     # --------------------------------------------------- bloom shards
@@ -339,7 +360,7 @@ class CrawlState:
         parts.extend(os.path.join(self._round_dir(r), "seen_delta")
                      for r in rounds)
         if not parts:
-            return self.spark.createDataFrame([], SEEN_SCHEMA)
+            return local_table(self.spark, [], SEEN_SCHEMA)
         if not ev_rounds:
             return self.spark.read.schema(SEEN_SCHEMA).parquet(*parts)
         # eviction-aware view: tag every add with its round (the base

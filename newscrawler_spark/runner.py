@@ -48,6 +48,7 @@ from newscrawler_spark.operators.store import (
     FETCH_LOG_SCHEMA,
     SEEN_SCHEMA,
     CrawlState,
+    local_table,
 )
 
 _PHASE_LOG = os.environ.get("SPARK_GRAFT_PHASE_LOG") == "1"
@@ -195,12 +196,16 @@ def run_crawl(
     seeds_e = FR.enrich_urls(seeds, "seed_url")
     robots_rules = build_robots_rules_cached(spark, pages_e, state_dir)
     delays = R.host_crawl_delays(robots_rules, cfg.user_agent)
-    # Round-invariant dimension tables are LOCALIZED (collected once,
-    # re-created as local relations): otherwise every per-round broadcast
-    # re-executes their whole derivation DAG as a separate subjob — the
-    # event-log profile showed those broadcast stages dominating round
-    # wall time. All are O(#seed hosts) rows by construction.
-    budgets = _localize(spark, build_host_budgets(seeds, delays, cfg))
+    # Round-invariant dimension tables are LOCALIZED: collected once as
+    # Arrow and re-created as JVM LocalRelations (_localize). Otherwise
+    # every per-round broadcast re-executes their whole derivation DAG as
+    # a separate subjob; a table rebuilt from pickled Python rows would
+    # instead run Python tasks in every job that scans it. All are
+    # O(#seed hosts) rows by construction.
+    budgets_df = build_host_budgets(seeds, delays, cfg)
+    budgets_arrow = budgets_df.toArrow()
+    _check_one_seed_per_host(budgets_arrow)
+    budgets = spark.createDataFrame(budgets_arrow, budgets_df.schema)
 
     if last is None:
         boot = _seed_frontier(seeds_e).unionByName(
@@ -214,9 +219,9 @@ def run_crawl(
         boot = FR.dedup_in_batch(boot)
         if cfg.respect_robots:
             boot = R.robots_gate(boot, robots_rules, cfg.user_agent)
-        empty_articles = spark.createDataFrame([], ARTICLES_SCHEMA)
-        empty_log = spark.createDataFrame([], FETCH_LOG_SCHEMA)
-        empty_counters = spark.createDataFrame([], COUNTERS_SCHEMA)
+        empty_articles = local_table(spark, [], ARTICLES_SCHEMA)
+        empty_log = local_table(spark, [], FETCH_LOG_SCHEMA)
+        empty_counters = local_table(spark, [], COUNTERS_SCHEMA)
         boot = boot.persist()
         # build shards at bootstrap when the seed set alone already
         # clears the activation threshold (A7 bulk mode seeds the whole
@@ -500,7 +505,8 @@ def run_crawl(
         def build_counters(counts: dict):
             n_sched = counts["fetch_log"]
             n_children = counts["seen_delta"]
-            return spark.createDataFrame(
+            return local_table(
+                spark,
                 [
                     (
                         run_id, r, n_sched + n_children, n_children, n_sched,
@@ -602,15 +608,16 @@ def evict_to_recrawl(
     r = last + 1
 
     def build_counters(counts: dict):
-        return spark.createDataFrame(
+        return local_table(
+            spark,
             [(state.run_id, r, counts["seen_evict"], 0, 0, 0, 0, 0, 0)],
             COUNTERS_SCHEMA,
         )
 
     man = state.commit_round(
-        r, frontier, spark.createDataFrame([], SEEN_SCHEMA),
-        spark.createDataFrame([], FETCH_LOG_SCHEMA),
-        spark.createDataFrame([], ARTICLES_SCHEMA),
+        r, frontier, local_table(spark, [], SEEN_SCHEMA),
+        local_table(spark, [], FETCH_LOG_SCHEMA),
+        local_table(spark, [], ARTICLES_SCHEMA),
         counters_builder=build_counters,
         bloom_shards=shards, bloom_mode="evict-carry",
         seen_evict=evict,
@@ -620,13 +627,29 @@ def evict_to_recrawl(
 
 
 def _localize(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Collect a small dimension DataFrame and rebuild it as a local
-    relation — per-query broadcasts then ship bytes instead of
-    re-executing the derivation DAG. Only for tables bounded by the seed
-    list (at 10^7+ hosts keep the distributed form and accept the subjob,
-    or persist to parquet)."""
-    rows = df.collect()
-    return spark.createDataFrame(rows, df.schema)
+    """Collect a small dimension DataFrame as Arrow and rebuild it as a
+    JVM ``LocalRelation`` with the same schema — per-query broadcasts
+    then ship its bytes instead of re-executing the derivation DAG, and
+    no scan of it runs Python. Only for tables bounded by the seed list
+    (at 10^7+ hosts keep the distributed form and accept the subjob, or
+    persist to parquet)."""
+    return spark.createDataFrame(df.toArrow(), df.schema)
+
+
+def _check_one_seed_per_host(budgets) -> None:
+    """The host-keyed tables (budgets, seed crawlers) feed left joins on
+    host: a host listed twice in the seeds would multiply its frontier
+    rows and so its per-round budget. Checked on the budget table already
+    collected to the driver (one row per seed) — no extra Spark job."""
+    from collections import Counter
+
+    counts = Counter(budgets.column("host").to_pylist())
+    repeated = sorted(str(h) for h, n in counts.items() if n > 1)
+    if repeated:
+        raise ValueError(
+            "seeds list these hosts more than once (one seed per host): "
+            + ", ".join(repeated)
+        )
 
 
 def build_robots_rules_cached(

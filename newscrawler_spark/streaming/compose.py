@@ -78,18 +78,20 @@ def streaming_feed_crawl(
             from newscrawler_spark.operators.store import (
                 COUNTERS_SCHEMA,
                 FETCH_LOG_SCHEMA,
+                local_table,
             )
 
             state_box["round"] += 1
             r = state_box["round"]
-            counters = spark.createDataFrame(
-                [("feed-stream", r, n, 0, 0, 0, n, 0, 0)], COUNTERS_SCHEMA
+            counters = local_table(
+                spark, [("feed-stream", r, n, 0, 0, 0, n, 0, 0)],
+                COUNTERS_SCHEMA,
             )
             state.commit_round(
                 r,
                 state.read_frontier(),
                 articles.select("url_hash"),
-                spark.createDataFrame([], FETCH_LOG_SCHEMA),
+                local_table(spark, [], FETCH_LOG_SCHEMA),
                 articles,
                 counters,
             )

@@ -113,16 +113,20 @@ def recrawl_rss_once(
     articles = _stamp_modified(extract_articles(fetched), changed).persist()
     n = articles.count()
     empty_frontier = state.read_frontier()
-    from newscrawler_spark.operators.store import COUNTERS_SCHEMA, FETCH_LOG_SCHEMA
+    from newscrawler_spark.operators.store import (
+        COUNTERS_SCHEMA,
+        FETCH_LOG_SCHEMA,
+        local_table,
+    )
 
-    counters = spark.createDataFrame(
-        [("rss-daemon", round_no, n, 0, n, n, n, 0, 0)], COUNTERS_SCHEMA
+    counters = local_table(
+        spark, [("rss-daemon", round_no, n, 0, n, n, n, 0, 0)], COUNTERS_SCHEMA
     )
     state.commit_round(
         round_no,
         empty_frontier,
         articles.select("url_hash"),
-        spark.createDataFrame([], FETCH_LOG_SCHEMA),
+        local_table(spark, [], FETCH_LOG_SCHEMA),
         articles,
         counters,
     )
@@ -192,17 +196,18 @@ def recrawl_rss_stream(
             from newscrawler_spark.operators.store import (
                 COUNTERS_SCHEMA,
                 FETCH_LOG_SCHEMA,
+                local_table,
             )
 
             state_box["round"] += 1
             r = state_box["round"]
-            counters = spark.createDataFrame(
-                [("rss-stream", r, n, 0, 0, 0, n, 0, 0)],
+            counters = local_table(
+                spark, [("rss-stream", r, n, 0, 0, 0, n, 0, 0)],
                 COUNTERS_SCHEMA,
             )
             state.commit_round(
                 r, state.read_frontier(), articles.select("url_hash"),
-                spark.createDataFrame([], FETCH_LOG_SCHEMA), articles, counters,
+                local_table(spark, [], FETCH_LOG_SCHEMA), articles, counters,
             )
         articles.unpersist()
 

@@ -14,11 +14,13 @@ from newscrawler_spark.functions.robots_core import (
     url_path,
 )
 from newscrawler_spark.operators.robots import (
+    ROBOTS_RULES_SCHEMA,
     build_robots_rules,
     host_crawl_delays,
     robots_gate,
     robots_sitemaps,
 )
+from newscrawler_spark.operators.store import FRONTIER_SCHEMA, local_table
 
 ADVERSARIAL_ROBOTS = """\
 User-agent: *
@@ -43,13 +45,13 @@ def adv_rules():
 
 @pytest.fixture(scope="module")
 def adv_rules_df(spark, adv_rules):
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         [
             (r.host, r.user_agent, r.path_prefix, r.allow, r.rule_order, r.crawl_delay)
             for r in adv_rules
         ],
-        "host string, user_agent string, path_prefix string, allow boolean, "
-        "rule_order int, crawl_delay double",
+        ROBOTS_RULES_SCHEMA,
     )
 
 
@@ -66,11 +68,7 @@ def _frontier_for(spark, paths):
         u = f"http://x.example{p}"
         c = canonicalize_py(u)
         rows.append((u, c, spark_xxhash64_str(c), "x.example", 1, 0, 0, "x.example", 0))
-    return spark.createDataFrame(
-        rows,
-        "url string, url_canon string, url_hash long, host string, priority int, "
-        "depth int, discovered_round int, seed_host string, retry int",
-    )
+    return local_table(spark, rows, FRONTIER_SCHEMA)
 
 
 @pytest.mark.parametrize("ua", ["*", "newscrawler", "SomeBot"])
@@ -133,4 +131,67 @@ def test_gate_plan_is_jvm_only(spark, adv_rules_df):
     fr = _frontier_for(spark, PATHS)
     plan = robots_gate(fr, adv_rules_df)._jdf.queryExecution().executedPlan().toString()
     assert "Python" not in plan
+    assert "ExistingRDD" not in plan  # both sides are JVM LocalRelations
     assert "Broadcast" in plan  # rule table must broadcast
+
+
+# ---- degenerate robots inputs: the whole smoke corpus crawled with no
+# robots.txt at all (empty rule table) and with every host blocked
+
+
+def _smoke_with_robots(smoke_pages_pd, body: str | None):
+    """The smoke corpus with every robots.txt row dropped (``body=None``)
+    or its body replaced."""
+    pages = smoke_pages_pd.copy()
+    is_robots = pages["url"].str.endswith("/robots.txt")
+    assert is_robots.sum() == 10
+    if body is None:
+        return pages[~is_robots].reset_index(drop=True)
+    pages.loc[is_robots, "html"] = pages.loc[is_robots, "url"].map(
+        lambda _: body.encode())
+    return pages
+
+
+def test_crawl_without_robots_matches_oracle(spark, tmp_path, smoke_pages_pd,
+                                             smoke_seeds_pd, smoke_seeds):
+    """No robots.txt anywhere: the localized rule table is empty, every
+    path is allowed, no sitemap is declared — and the crawl still equals
+    the oracle's."""
+    from newscrawler_spark.config import CrawlConfig
+    from newscrawler_spark.operators.store import _parquet_rows
+    from newscrawler_spark.runner import run_crawl
+    from newscrawler_spark.sources.fixtures import PAGES_SCHEMA
+    from tests.oracle_crawler import OracleCrawler
+    from tests.test_e2e_ordering import _engine_log, _oracle_log
+
+    cfg = CrawlConfig(per_host_budget=5, max_depth=3)
+    pages_pd = _smoke_with_robots(smoke_pages_pd, None)
+    pages = spark.createDataFrame(pages_pd, schema=PAGES_SCHEMA)
+    res = run_crawl(spark, pages, smoke_seeds, str(tmp_path), cfg,
+                    max_rounds=30, use_bloom=False)
+    assert _parquet_rows(str(tmp_path / "robots_rules")) == 0
+    want = OracleCrawler(pages_pd.to_dict("records"),
+                         smoke_seeds_pd.to_dict("records"), cfg).run(max_rounds=30)
+    assert _engine_log(res.state) == _oracle_log(want)
+    assert {r.url_hash for r in res.state.read_seen().collect()} == want.seen
+    # the robots-blocked /private/ section is crawlable now
+    assert any("/private/" in row[3] for row in _engine_log(res.state))
+
+
+def test_crawl_all_blocked_commits_empty_round0(spark, tmp_path,
+                                                smoke_pages_pd, smoke_seeds):
+    """Every host disallows everything: the robots gate removes every
+    seed, round 0 commits an empty frontier, and no round runs."""
+    from newscrawler_spark.runner import run_crawl
+    from newscrawler_spark.sources.fixtures import PAGES_SCHEMA
+
+    pages_pd = _smoke_with_robots(smoke_pages_pd, "User-agent: *\nDisallow: /\n")
+    pages = spark.createDataFrame(pages_pd, schema=PAGES_SCHEMA)
+    res = run_crawl(spark, pages, smoke_seeds, str(tmp_path), max_rounds=5)
+    assert res.rounds_run == 0
+    assert res.final_round == 0
+    assert res.state.committed_rounds() == [0]
+    counts = res.state.manifest(0)["row_counts"]
+    assert counts["frontier"] == 0
+    assert counts["seen_delta"] == 0
+    assert res.state.read_fetch_log().count() == 0
